@@ -12,6 +12,13 @@ import org.apache.spark.sql.DataFrame
   * data-scale tables. */
 object Sinks {
 
+  /** The filesystem that owns `path` (its scheme and authority), not the
+    * session's default one: an `s3a://` table on a `file://`-default
+    * session must resolve to S3A. */
+  private[io] def fileSystem(spark: org.apache.spark.sql.SparkSession,
+      path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   /** S9 — delimited artifact write (header, custom sep). Returns the
     * final file path when single=true. */
   def writeDelimited(df: DataFrame, path: String, sep: String = "\t",
@@ -50,7 +57,7 @@ object Sinks {
     val spark = df.sparkSession
     val tmp = path + ".tmp"
     df.write.mode("overwrite").parquet(tmp)
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, path)
     sidecar.foreach { case (name, body) =>
       require(name.startsWith("_"),
         s"sidecar files must be underscore-prefixed (parquet-invisible), got $name")
@@ -79,7 +86,7 @@ object Sinks {
       name: String, body: String): Unit = {
     require(name.startsWith("_"),
       s"sidecar files must be underscore-prefixed (parquet-invisible), got $name")
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, path)
     val out = fs.create(new Path(path, name), true)
     try out.write(body.getBytes("UTF-8")) finally out.close()
   }
@@ -89,7 +96,7 @@ object Sinks {
     * without one). */
   def readSidecar(spark: org.apache.spark.sql.SparkSession, path: String,
       name: String): Option[String] = {
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, path)
     val p = new Path(path, name)
     if (!fs.exists(p)) None
     else {
@@ -108,14 +115,13 @@ object Sinks {
   def withDoneMarker(spark: org.apache.spark.sql.SparkSession,
       marker: String)(write: => Unit): Unit = {
     write
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, marker)
     fs.create(new Path(marker), true).close()
   }
 
   def markerExists(spark: org.apache.spark.sql.SparkSession,
       marker: String): Boolean =
-    FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .exists(new Path(marker))
+    fileSystem(spark, marker).exists(new Path(marker))
 
   /** S14 — step-log sink (update_reads_by_lane.py:179-209 writes a
     * per-lane log file): one text file of log lines. Driver-composed
@@ -132,7 +138,7 @@ object Sinks {
     * exists. */
   def readOrEmpty(spark: org.apache.spark.sql.SparkSession, path: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, path)
     if (fs.exists(new Path(path))) spark.read.parquet(path)
     else if (fs.exists(new Path(path + ".old"))) spark.read.parquet(path + ".old")
     else spark.createDataFrame(

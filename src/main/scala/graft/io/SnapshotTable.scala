@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Versioned snapshot table — the lakehouse-lite sink (the commit-log
@@ -46,9 +46,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SnapshotTable {
 
-  private def fs(spark: SparkSession): FileSystem =
-    FileSystem.get(spark.sparkContext.hadoopConfiguration)
-
   private def commitDir(path: String) = new Path(path, "_commits")
 
   private final case class Commit(version: Long, action: String, rows: Long,
@@ -58,7 +55,7 @@ object SnapshotTable {
   }
 
   private def commits(spark: SparkSession, path: String): Seq[Commit] = {
-    val f = fs(spark)
+    val f = Sinks.fileSystem(spark, path)
     val dir = commitDir(path)
     if (!f.exists(dir)) return Seq.empty
     f.listStatus(dir).toSeq
@@ -117,7 +114,7 @@ object SnapshotTable {
     val rows = spark.read.parquet(dataDir.toString).count()
     try commit(spark, path, next, mode, rows, batchId, dirName)
     catch { case e: java.io.IOException =>
-      fs(spark).delete(dataDir, true) // reclaim the loser's staging
+      Sinks.fileSystem(spark, path).delete(dataDir, true) // reclaim the loser's staging
       throw e
     }
     next
@@ -135,7 +132,7 @@ object SnapshotTable {
     if (all.isEmpty) return Seq.empty
     val latest = all.last.version
     val referenced = all.map(_.dir).toSet
-    val f = fs(spark)
+    val f = Sinks.fileSystem(spark, path)
     val root = new Path(path)
     if (!f.exists(root)) return Seq.empty
     f.listStatus(root).toSeq
@@ -178,7 +175,7 @@ object SnapshotTable {
   private[graft] def commit(spark: SparkSession, path: String,
       version: Long, mode: String, rows: Long, batchId: Long = -1L,
       dataDirName: String = null): Unit = {
-    val f = fs(spark)
+    val f = Sinks.fileSystem(spark, path)
     val dir = commitDir(path)
     f.mkdirs(dir)
     val tmp = new Path(dir, s"_tmp_$version")

@@ -1,14 +1,24 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.CleaningFunctions._
 import graft.io.Sources
 
 /** Metadata-ingestion pipeline (SURVEY §3.1 — update_metadata.py +
   * utils/parse.py): sheet read → species/project lookup → accession
-  * lookup → cleaning → finalize. One narrow stage plus two broadcast
-  * joins; no shuffle until a downstream merge.
+  * lookup → cleaning → finalize. The sheet itself stays narrow, but
+  * [[withProjectId]] aggregates the species dimension twice (two
+  * shuffles of the dimension, then two broadcast joins into the sheet).
+  *
+  * [[ingestMany]] materializes each validated sheet once, with an eager
+  * `localCheckpoint` (`GraftSqlShim.measuredBarrier`): a batch consumes
+  * its samples in several sinks (a state merge, a per-project scan), and
+  * a lazy frame would re-parse the sheet and repeat the dimension
+  * shuffles for every one. The checkpoint lives in executor
+  * block storage, so a lost executor fails the batch; the state sinks
+  * commit with an atomic swap, so re-running the batch is safe.
   */
 object IngestMetadata {
 
@@ -168,7 +178,9 @@ object IngestMetadata {
   /** Batch ingestion with per-file error capture (update_metadata.py:
     * 97-105): a bad sheet records an error-ledger row and the pipeline
     * continues; good sheets union into one frame. Returns
-    * (samples, ledger(file_name, status, error)). */
+    * (samples, ledger(file_name, status, error)); the samples frame is
+    * built over the materialized sheets, so consuming it re-reads no
+    * source file. Fatal JVM errors are not ledger rows: they propagate. */
   def ingestMany(spark: SparkSession, files: Seq[(String, String)],
       speciesProjects: DataFrame, assemblies: DataFrame): (Option[DataFrame], DataFrame) = {
     def msg(e: Throwable) = Option(e.getMessage).getOrElse(e.toString)
@@ -182,21 +194,23 @@ object IngestMetadata {
         }
         (path, Right(df)): (String, Either[String, DataFrame])
       } catch {
-        case e: Throwable => (path, Left(msg(e)))
+        case NonFatal(e) => (path, Left(msg(e)))
       }
     }
-    // Runtime validation (force the parse so row-level errors surface here,
-    // not downstream) runs as ONE concurrent wave: Spark schedules jobs
-    // from separate threads in parallel, so a 100k-sheet backfill costs one
-    // scheduling round instead of a sequential driver loop.
+    // Runtime validation (force the parse of every column so row-level
+    // errors surface here, not downstream) materializes each sheet, in ONE
+    // concurrent wave: Spark schedules jobs from separate threads in
+    // parallel, so a 100k-sheet backfill costs one scheduling round
+    // instead of a sequential driver loop.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(math.max(built.size, 1), 16))
     val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
     val results = try {
       val futures = built.map {
         case (path, Right(df)) =>
-          (path, scala.concurrent.Future { df.count(); Right(df): Either[String, DataFrame] }(ec)
-            .recover { case e: Throwable => Left(msg(e)) }(ec))
+          (path, scala.concurrent.Future {
+            Right(GraftSqlShim.measuredBarrier(df)): Either[String, DataFrame]
+          }(ec).recover { case NonFatal(e) => Left(msg(e)) }(ec))
         case (path, left) => (path, scala.concurrent.Future.successful(left))
       }
       futures.map { case (path, f) =>

@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim}
 import org.apache.spark.sql.functions._
 import graft.ops.{Linkage, Upsert}
 
@@ -14,8 +14,16 @@ import graft.ops.{Linkage, Upsert}
   *     received/filesize_sum (:255-273);
   *  5. matched reads marked non-orphan (:275-284).
   *
-  * Two shuffles end-to-end at scale: the linkage equi join and the merge;
-  * everything else is narrow or broadcast.
+  * Planned lazily, steps 3–5 are shuffle-heavy: on the test fixture the
+  * updated-samples frame takes seven exchanges (five shuffles, two
+  * broadcasts) and the updated-reads frame seven more (the token
+  * distinct, the residual anti-join and its nested-loop match, the
+  * conflict window, the aggregates, the merge). So step 3 runs once:
+  * [[run]] materializes the resolved linkage with an eager
+  * `localCheckpoint` (`GraftSqlShim.measuredBarrier`) and builds both
+  * returned frames over it. A lost executor therefore fails the batch
+  * instead of recomputing the linkage; callers commit the outputs with
+  * an atomic swap, so re-running the batch is safe.
   */
 object LinkReads {
 
@@ -28,12 +36,14 @@ object LinkReads {
     Upsert.merge(reads, incoming, Seq("file_name"), policies)
   }
 
-  /** Steps 2–5 — link and merge. Returns (updatedSamples, updatedReads). */
+  /** Steps 2–5 — link and merge. Returns (updatedSamples, updatedReads),
+    * both over one materialized linkage: executing either, or both,
+    * never re-runs the tiered match. */
   def run(samples: DataFrame, reads: DataFrame): (DataFrame, DataFrame) = {
     val cleaned = samples.withColumn("files",
       when(col("files").isNotNull, Upsert.pull(col("files"), Seq("", "NaN"))))
-    val linked = Linkage.resolveConflicts(
-      Linkage.linkScalable(cleaned, reads))
+    val linked = GraftSqlShim.measuredBarrier(Linkage.resolveConflicts(
+      Linkage.linkScalable(cleaned, reads)))
     val agg = Linkage.aggregates(linked)
     val updatedSamples = Upsert.merge(cleaned, agg, Seq("sample_name"),
       Map("files" -> Upsert.AddToSet))

@@ -1,8 +1,12 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Generate
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.apache.spark.sql.functions._
 import graft.io.Listing
+import graft.ops.{Linkage, Upsert}
 import graft.pipelines.LinkReads
 
 class LinkReadsSpec extends SparkSpec {
@@ -49,5 +53,37 @@ class LinkReadsSpec extends SparkSpec {
     assert(orphans.contains("ORPHAN_X_R1.fastq.gz"))
     assert(orphans.contains("NEW_FILE_R1.fastq.gz"))
     assert(!orphans.contains("AB-1_R1.fastq.gz"))
+  }
+
+  test("run links once: both outputs read one materialized linkage and equal the lazy composition") {
+    val samples = Fixtures.samples(spark)
+    val reads = Fixtures.reads(spark)
+    val (updSamples, updReads) = LinkReads.run(samples, reads)
+
+    val cleaned = samples.withColumn("files",
+      when(col("files").isNotNull, Upsert.pull(col("files"), Seq("", "NaN"))))
+    val linked = Linkage.resolveConflicts(Linkage.linkScalable(cleaned, reads))
+    val expSamples = Upsert.merge(cleaned, Linkage.aggregates(linked),
+      Seq("sample_name"), Map("files" -> Upsert.AddToSet))
+    val expReads = Linkage.markOrphans(reads, linked)
+
+    // the token explode and the residual BNLJ mark a plan that re-runs
+    // the tiered linkage: the lazy composition has both, run's outputs neither
+    def linkageOps(df: DataFrame): (Int, Int) = {
+      val qe = df.queryExecution
+      (qe.optimizedPlan.collect { case g: Generate => g }.size,
+        qe.sparkPlan.collect { case j: BroadcastNestedLoopJoinExec => j }.size)
+    }
+    for (df <- Seq(expSamples, expReads)) {
+      val (gen, bnlj) = linkageOps(df)
+      assert(gen > 0 && bnlj > 0)
+    }
+    for (df <- Seq(updSamples, updReads)) assert(linkageOps(df) === ((0, 0)))
+
+    def rows(df: DataFrame): Seq[String] =
+      df.select(df.columns.sorted.toSeq.map(c => col(c)): _*)
+        .collect().map(_.toString).sorted.toSeq
+    assert(rows(updSamples) === rows(expSamples))
+    assert(rows(updReads) === rows(expReads))
   }
 }

@@ -112,16 +112,26 @@ class PipelineSpec extends SparkSpec {
   test("batch ingestion captures per-file errors and continues (update_metadata.py:97-105)") {
     val bad = java.nio.file.Files.createTempFile("graft-bad", ".tsv")
     java.nio.file.Files.writeString(bad, "no header marker here\njust junk\n")
+    val good = Files.createTempFile("graft-good", ".tsv")
+    Files.copy(Paths.get(s"$fixtures/samples_non_minicore.tsv"), good,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     val (samples, ledger) = IngestMetadata.ingestMany(spark, Seq(
-      (s"$fixtures/samples_non_minicore.tsv", "non-minicore"),
+      (good.toString, "non-minicore"),
       (bad.toString, "non-minicore")),
       speciesProjects, assemblies)
-    val led = ledger.collect().map(r => r.getAs[String]("file_name") ->
+    def ledgerRows = ledger.collect().map(r => r.getAs[String]("file_name") ->
       (r.getAs[String]("status"), r.getAs[String]("error"))).toMap
-    assert(led(s"$fixtures/samples_non_minicore.tsv")._1 === "ok")
+    val led = ledgerRows
+    assert(led(good.toString)._1 === "ok")
     assert(led(bad.toString)._1 === "error")
     assert(led(bad.toString)._2 != null)
+    // the returned samples are materialized: with the source sheet gone
+    // they still yield the good file's rows, and the ledger is unchanged
+    Files.delete(good)
     assert(samples.isDefined && samples.get.count() === 4)  // good file still ingested
+    assert(samples.get.select("*sample_name").collect().map(_.getString(0)).toSet ===
+      Set("CC_131_a", "samp2", "samp3", "samp4"))
+    assert(ledgerRows === led)
   }
 
   test("workflow sheet minimum slice end-to-end (§7.3): pair, derive, write, stamp") {

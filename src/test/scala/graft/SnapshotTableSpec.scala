@@ -1,7 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import graft.io.SnapshotTable
+import org.apache.spark.sql.types.{LongType, StructType}
+import graft.io.{Sinks, SnapshotTable}
 
 /** Snapshot-table contract: committed-only visibility, append chains,
   * overwrite bases, time travel, commit-race loss, orphan reclaim, and
@@ -221,5 +222,27 @@ class SnapshotTableSpec extends SparkSpec {
       { SnapshotTable.write(Seq(1L).toDF("id"), p, "overwrite")
         SnapshotTable.read(spark, p, Some(5L)) })
     assert(e2.getMessage.contains("never committed"))
+  }
+
+  test("swap and snapshot tables resolve their path's filesystem, not the default one") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val saved = conf.get("fs.defaultFS")
+    val root = new java.io.File(tmpDir()).toURI.toString // file:/.../
+    val swap = s"${root}swap"
+    val snap = s"${root}snap"
+    try {
+      // no filesystem is registered for this scheme: resolving the
+      // default filesystem anywhere in the sinks fails the test
+      conf.set("fs.defaultFS", "graftunregistered://nowhere")
+      Sinks.atomicParquetSwap(Seq(1L, 2L).toDF("id"), swap)
+      Sinks.atomicParquetSwap(Seq(3L).toDF("id"), swap) // renames the live table aside
+      val swapped = Sinks.readOrEmpty(spark, swap, new StructType().add("id", LongType))
+      assert(swapped.collect().map(_.getLong(0)).toSet === Set(3L))
+      SnapshotTable.write(Seq(4L).toDF("id"), snap, "overwrite")
+      SnapshotTable.write(Seq(5L).toDF("id"), snap, "append")
+      assert(ids(snap) === Set(4L, 5L))
+    } finally {
+      if (saved == null) conf.unset("fs.defaultFS") else conf.set("fs.defaultFS", saved)
+    }
   }
 }
