@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared SparkSession builder for the single-JVM local[N] entry points
-  * (Bench / Verify / JudgeProbe).
+/** The one SparkSession builder: every main (Bench, Verify, StageProbe,
+  * JudgeProbe, PlanDump, ScaleGen), the perfbench runner and the test
+  * suites' shared session build their single-JVM local[N] session here.
   *
   * Two hardenings beyond the obvious settings, both learned from a bench
   * run that died mid-flight at sf0.1:
@@ -21,8 +22,43 @@ import org.apache.spark.sql.SparkSession
   *    JVM here, so a long GC pause stalls both sides at once; the
   *    defaults (10 s beats, 60 missed max) convert one bad pause into
   *    executor suicide mid-benchmark.
+  *
+  * One sizing: `spark.sql.codegen.cache.maxEntries`
+  * ([[codegenCacheMaxEntries]]). Spark compiles each whole-stage and
+  * projection class with Janino and keeps it in one JVM-wide LRU keyed
+  * by the generated source; Spark's default capacity is 100. It is a
+  * static conf that `CodeGenerator` reads once per JVM, so only the
+  * JVM's first session sets it (a cluster job passes it with `--conf`,
+  * see RUNBOOK); `extra` can still override it there. Measured with
+  * `CodegenMetrics.METRIC_COMPILATION_TIME.getCount` and the cache's
+  * size, local[4]:
+  *
+  *  - perfbench `wrangle` (one CCGP batch a pass): about 180 classes a
+  *    batch, 237 distinct over a six-batch run. At 100 entries every
+  *    warm batch recompiled 175–184 of them; at 1024, 0–2.
+  *  - perfbench `queries` (six queries a pass): 110 distinct. At 100
+  *    entries every warm pass recompiled 19–39; at 1024, none.
+  *  - the sf0.01 Verify sweep (377 queries, each run once): 4757
+  *    distinct; at 1024 it compiles 5797, so about 1040 classes shared
+  *    between queries are compiled again after an eviction.
+  *  - memory: an entry keeps about 36 KB of heap and metaspace (30 KB
+  *    heap: the class bytes and the Janino loader; 7 KB metaspace),
+  *    measured as what a full GC frees once the cache is emptied. The
+  *    process grows by more: at 1024, peak RSS of a `wrangle` run is
+  *    42 MB higher (+3.1 %, 137 more entries), of a `queries` run
+  *    12 MB (+0.9 %).
+  *
+  * 1024 is about four times the largest repeated working set measured
+  * (`wrangle`'s 237), and a full cache keeps about 37 MB of heap and
+  * metaspace. A few recompiles a warm pass remain: AQE names
+  * whole-stage classes after stage ids that follow stage completion
+  * order (see `CodegenCacheSpec`).
   */
 object LocalSession {
+  /** Capacity of Spark's JVM-wide cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`); see the object scaladoc. */
+  val codegenCacheMaxEntries: Int = 1024
+
   def build(cpus: String, extra: Map[String, String] = Map.empty): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -66,6 +102,7 @@ object LocalSession {
       // hyperplanes) the default ~2 GiB cap let one render dominate a
       // whole benchmark query. 256 KiB is plenty for debugging.
       .config("spark.sql.maxPlanStringLength", "262144")
+      .config("spark.sql.codegen.cache.maxEntries", codegenCacheMaxEntries.toString)
     extra.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -12,15 +12,25 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.StageProbe <sfDir> <query> [query...]
   */
 object StageProbe {
+  /** Parses `k=v,k=v`; an entry without `=` fails with a usage message
+    * naming it. */
+  def parseConf(spec: String): Map[String, String] =
+    spec.split(',').toSeq.map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) => k -> v
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_PROBE_CONF entry '$kv' is not key=value " +
+            "(usage: SPARK_GRAFT_PROBE_CONF=\"k=v,k=v\")")
+      }
+    }.toMap
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
     // diagnostic knob: SPARK_GRAFT_PROBE_CONF="k=v,k=v" overlays session
     // confs so a conf hypothesis can be A/B'd without code edits
     val extra = sys.env.get("SPARK_GRAFT_PROBE_CONF")
-      .map(_.split(',').toSeq.map { kv =>
-        val Array(k, v) = kv.split("=", 2); k -> v
-      }.toMap).getOrElse(Map.empty)
+      .map(parseConf).getOrElse(Map.empty)
     val spark = LocalSession.build(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
       Map("spark.sql.adaptive.enabled" -> "true") ++ extra)
@@ -47,7 +57,8 @@ object StageProbe {
       }
     })
 
-    // same warm-up as Bench so JIT/codegen cost doesn't pollute stage 0
+    // same warm-up as Bench so class loading and JIT warm-up do not
+    // pollute stage 0
     {
       import org.apache.spark.sql.functions._
       val li = Tables.load(spark, sfDir, "lineitem").limit(10000)

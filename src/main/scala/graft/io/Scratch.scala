@@ -32,9 +32,23 @@ object Scratch {
     p
   }
 
+  private val created =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  /** Registered on first use. The frames built over a scratch directory
+    * read it lazily, possibly long after the call that wrote it, so the
+    * directories live until the JVM exits and are deleted then. */
+  private lazy val cleanup: Unit = sys.addShutdownHook {
+    created.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+  }
+
   /** A fresh scratch directory under the root (the
     * `Files.createTempDirectory` the round-trip queries used, pointed
-    * at fast storage). */
-  def dir(prefix: String): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory(root, prefix)
+    * at fast storage), deleted when the JVM exits. */
+  def dir(prefix: String): java.nio.file.Path = {
+    cleanup
+    val d = java.nio.file.Files.createTempDirectory(root, prefix)
+    created.add(d)
+    d
+  }
 }

@@ -3,7 +3,7 @@ package graft
 /** The config-only installation path: the shared test session is built
   * with `spark.sql.extensions=graft.plans.GraftExtensions` (a STATIC
   * conf — it must ride the first session of the JVM, so it lives in
-  * TestSpark's builder), and the custom expressions must resolve from
+  * LocalSession's builder, which TestSpark uses), and the custom expressions must resolve from
   * pure SQL with no Scala registration call.
   *
   * The assertions run in a `newSession()`: temp-function registrations

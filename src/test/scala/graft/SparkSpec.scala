@@ -3,24 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM, one session). */
+/** Shared local SparkSession for all suites (one JVM, one session), built
+  * by the production [[LocalSession]] builder so the suites run under the
+  * engine's own confs, static ones included. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // config-only install of the custom SQL functions; driven by
-      // GraftExtensionsSpec (a static conf — must be set on the FIRST
-      // session of the JVM, later builders can't add it)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = LocalSession.build("4", Map(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.app.name" -> "graft-test"))
   val sf0001 = "/root/testdata/sf0.001"
 }
 
